@@ -1,5 +1,5 @@
-from flusher_spark.control.model import JOBS_COLUMNS, RUN_LOG_COLUMNS, Job
-from flusher_spark.control.store import JobStore
+from flusher_spark.control.model import Job
+from flusher_spark.control.store import JOBS_COLUMNS, RUN_LOG_COLUMNS, JobStore
 from flusher_spark.control.scheduler import (
     Scheduler,
     due_jobs,

@@ -12,31 +12,15 @@ two engine additions the reference is documented to lack:
                  and should_run never fires again, manager.py:179)
 
 Timestamps are ISO-8601 UTC strings in the control table, exactly like the
-reference's sheet cells (manager.py:94,104) — the Spark-side predicates cast
-them; empty means never-ran (epoch 1900-01-01, refresh_interval.py:32).
+reference's sheet cells (manager.py:94,104) — the scheduler's due predicate
+parses them on the driver; empty means never-ran (epoch 1900-01-01,
+refresh_interval.py:32). Each dataclass's fields, in order, are its table's
+columns on disk (``store.py``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-JOBS_COLUMNS = [
-    "job_id",
-    "document",
-    "sheet",
-    "cellrange",
-    "target_system",
-    "destination",
-    "incremental",
-    "refresh_now",
-    "refresh_interval",
-    "last_success",
-    "state",
-    "last_result",
-    "lease_ts",
-]
-
-RUN_LOG_COLUMNS = ["start", "end", "document", "sheet", "cellrange", "status", "result"]
 
 #: States (reference manager.py:90,106,124,179).
 STATE_RUNNING = "Running"
@@ -62,9 +46,6 @@ class Job:
     last_result: str = ""
     lease_ts: str = ""
 
-    def as_row(self) -> list:
-        return [getattr(self, c) for c in JOBS_COLUMNS]
-
 
 @dataclass
 class RunRecord:
@@ -77,6 +58,3 @@ class RunRecord:
     cellrange: str
     status: str
     result: str
-
-    def as_row(self) -> list:
-        return [self.start, self.end, self.document, self.sheet, self.cellrange, self.status, self.result]

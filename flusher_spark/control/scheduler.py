@@ -5,12 +5,13 @@ One tick (reference run(), manager.py:206-214) =
   (filter_fixing_invalid_schedules, manager.py:167-175) → filter due jobs
   (should_run, manager.py:178-180) → run each due job's pipeline.
 
-The due-predicate is a real Spark filter over the jobs DataFrame
-(``due_jobs``): interval strings are parsed once on the driver (there are
-only distinct-few in a control table) and folded in as a literal map — no
-UDF. Job pipelines are one lazy Spark plan each, source→sink, with no
-temp-CSV hop (the reference materializes to local disk between export and
-load, export.py:59-66 / manager.py:195-196).
+The control plane stays on the driver: the jobs table is spreadsheet-sized,
+so the due predicate (``due_jobs``) is a plain function over the job list
+the tick already holds, with interval strings parsed once per distinct
+value, and the store persists state, run log and metrics with pyarrow. A
+tick launches Spark jobs only inside job pipelines — one lazy Spark plan
+each, source→sink, with no temp-CSV hop (the reference materializes to
+local disk between export and load, export.py:59-66 / manager.py:195-196).
 
 The reference runs jobs serially (manager.py:211-214; parallelism is its
 open TODO manager.py:22, TODO.md:9). Each of our jobs is internally
@@ -29,13 +30,13 @@ import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Observation, SparkSession
 
 from flusher_spark.control.model import EPOCH_NEVER, STATE_RUNNING, Job, RunRecord
-from flusher_spark.control.store import JobStore, utcnow_iso
-from flusher_spark.instrumentation import Recorder, observed
+from flusher_spark.control.store import JobStore
+from flusher_spark.instrumentation import Recorder, observed, utcnow_iso
 from flusher_spark.functions.intervals import from_human
 from flusher_spark.sinks.csv import to_csv
 from flusher_spark.sinks.table import Warehouse
@@ -60,47 +61,51 @@ def parse_intervals(jobs: list[Job]) -> tuple[dict[str, int], dict[int, str]]:
     return seconds, errors
 
 
+def _epoch_seconds(ts: str) -> int:
+    """Whole seconds since 1970 of an ISO-8601 stamp, as Spark's
+    ``to_timestamp(ts).cast("long")`` reads it in the engine's UTC session
+    (session.py): no offset means UTC, an offset is converted, and a
+    fraction floors. A malformed stamp raises, as it does under ANSI."""
+    t = datetime.fromisoformat(ts)
+    if t.tzinfo is not None:
+        t = t.astimezone(timezone.utc).replace(tzinfo=None)
+    d = t - datetime(1970, 1, 1)
+    return d.days * 86400 + d.seconds  # timedelta keeps seconds in [0, 86400): a floor
+
+
 def due_jobs(
-    jobs_df: DataFrame,
+    jobs: list[Job],
     interval_seconds: dict[str, int],
     now: str,
     lease_seconds: int = 3600,
-) -> DataFrame:
-    """The should_run predicate as a Spark filter (reference
-    manager.py:178-180 + refresh_interval.py:30-34):
+) -> list[int]:
+    """Ids of the jobs the should_run predicate selects, in list order
+    (reference manager.py:178-180 + refresh_interval.py:30-34):
 
       not Running (or the Running lease has expired — engine addition)
       AND (refresh_now OR elapsed-since-last-success > interval)
 
     Empty last_success counts from 1900-01-01 (refresh_interval.py:32);
     jobs with no interval and no refresh_now never fire (is_scheduled
-    returns falsy None, refresh_interval.py:33-34)."""
-    now_ts = F.to_timestamp(F.lit(now))
-    if interval_seconds:
-        imap = F.create_map(*[F.lit(x) for kv in interval_seconds.items() for x in kv])
-        secs = imap.getItem(F.col("refresh_interval"))
-    else:
-        secs = F.lit(None).cast("int")
-    last = F.coalesce(
-        F.to_timestamp(F.when(F.col("last_success") == "", None).otherwise(F.col("last_success"))),
-        F.to_timestamp(F.lit(EPOCH_NEVER)),
-    )
-    elapsed = now_ts.cast("long") - last.cast("long")
-    lease_age = now_ts.cast("long") - F.to_timestamp(
-        F.when(F.col("lease_ts") == "", None).otherwise(F.col("lease_ts"))
-    ).cast("long")
-    # A Running row with NO lease timestamp counts as EXPIRED, not fresh:
-    # rows migrated from the reference system (no lease column) or
-    # hand-edited ones arrive exactly like that, and coalescing the NULL
-    # age to 0 wedged them as Running forever — the stuck-Running hazard
-    # the lease exists to fix (r11 review).
-    not_running = (F.col("state") != STATE_RUNNING) | (
-        F.coalesce(lease_age, F.lit(lease_seconds + 1)) > lease_seconds
-    )
-    scheduled = secs.isNotNull() & (elapsed > secs)
-    return jobs_df.where(
-        (F.col("document") != "") & not_running & (F.col("refresh_now") | scheduled)
-    )
+    returns falsy None, refresh_interval.py:33-34). A Running job with NO
+    lease timestamp counts as EXPIRED, not fresh: rows migrated from the
+    reference system (no lease column) or hand-edited ones arrive exactly
+    like that, and reading them as fresh wedged them as Running forever —
+    the stuck-Running hazard the lease exists to fix (r11 review)."""
+    now_s = _epoch_seconds(now)
+
+    def not_running(j: Job) -> bool:
+        return (
+            j.state != STATE_RUNNING
+            or not j.lease_ts
+            or now_s - _epoch_seconds(j.lease_ts) > lease_seconds
+        )
+
+    def scheduled(j: Job) -> bool:
+        secs = interval_seconds.get(j.refresh_interval)
+        return secs is not None and now_s - _epoch_seconds(j.last_success or EPOCH_NEVER) > secs
+
+    return [j.job_id for j in jobs if j.document and not_running(j) and (j.refresh_now or scheduled(j))]
 
 
 def translate_error(exc: Exception, job: Job, source: SheetSource) -> str:
@@ -203,13 +208,10 @@ class Scheduler:
         # manager.py:167-175).
         for job_id, err in invalid.items():
             self.store.mark_invalid_schedule(job_id, err)
-        jobs_df = self.store.jobs_df()
         due = [
-            r["job_id"]
-            for r in due_jobs(jobs_df, interval_seconds, now, self.lease_seconds)
-            .select("job_id")
-            .collect()
-            if r["job_id"] not in invalid
+            job_id
+            for job_id in due_jobs(jobs, interval_seconds, now, self.lease_seconds)
+            if job_id not in invalid
         ]
         # Claim serially FIRST: mark_running consumes refresh_now and takes
         # the lease before any pipeline starts, so a job is never visible as

@@ -1,10 +1,12 @@
-"""JobStore: the jobs control table + audit log + pinned schemas on disk.
+"""JobStore: the jobs control table + audit log + metrics + pinned schemas.
 
-The control table is spreadsheet-scale by construction (the reference's is a
-literal worksheet), so state transitions are driver-side upserts persisted to
-parquet — the single-writer discipline the reference also has (one polling
-loop). On a cluster deployment the same interface fronts a Delta table with
-MERGE; nothing else changes.
+All three tables are spreadsheet-scale by construction (the reference's
+control table is a literal worksheet), so they stay on the driver: one Arrow
+schema per table, pyarrow writes through tmp+atomic-replace, and Spark only
+for the DataFrame views (``jobs_df``, ``run_log``, ``metrics_df``). This is
+the single-writer discipline the reference also has (one polling loop). On
+a cluster deployment the same interface fronts a Delta table with MERGE;
+nothing else changes.
 
 State-machine semantics preserved from the reference (these are behavioral
 specs, SURVEY.md §2.A row 20):
@@ -21,28 +23,44 @@ re-schedule after lease expiry instead of wedging.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import threading
+import typing
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
-# One timestamp format for control-table state and metrics rows alike
-# (instrumentation never imports control, so this direction is cycle-free).
-from flusher_spark.instrumentation import utcnow_iso  # noqa: F401  (re-exported)
-from flusher_spark.control.model import (
-    EPOCH_NEVER,
-    JOBS_COLUMNS,
-    RUN_LOG_COLUMNS,
-    STATE_FAILURE,
-    STATE_RUNNING,
-    STATE_SUCCESS,
-    Job,
-    RunRecord,
-)
+from flusher_spark.instrumentation import Metric, utcnow_iso
+from flusher_spark.control.model import STATE_FAILURE, STATE_RUNNING, STATE_SUCCESS, Job, RunRecord
+
+_ARROW_TYPES = {int: pa.int64(), float: pa.float64(), bool: pa.bool_(), str: pa.string()}
+
+
+def _schema(row_type) -> pa.Schema:
+    """One nullable column per field of a row dataclass, in field order."""
+    hints = typing.get_type_hints(row_type)
+    return pa.schema([(f.name, _ARROW_TYPES[hints[f.name]]) for f in dataclasses.fields(row_type)])
+
+
+#: The on-disk format of the control table, the audit log (reference
+#: add_log_line, manager.py:155-163) and the metrics table.
+JOBS_SCHEMA = _schema(Job)
+RUN_LOG_SCHEMA = _schema(RunRecord)
+METRICS_SCHEMA = _schema(Metric)
+
+JOBS_COLUMNS = JOBS_SCHEMA.names
+RUN_LOG_COLUMNS = RUN_LOG_SCHEMA.names
+
+
+def _write(table: pa.Table, path: str, tmp: str) -> None:
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)  # atomic swap: readers never see a torn file
 
 
 class JobStore:
@@ -70,6 +88,10 @@ class JobStore:
     def _log_path(self) -> str:
         return os.path.join(self.root, "run_log")
 
+    @property
+    def _metrics_path(self) -> str:
+        return os.path.join(self.root, "metrics")
+
     def _load(self) -> None:
         if os.path.exists(self._jobs_path):
             table = pq.read_table(self._jobs_path).to_pylist()
@@ -89,15 +111,30 @@ class JobStore:
         with self._lock:
             self._load()
 
+    def _table(self) -> pa.Table:
+        return pa.Table.from_pylist([j.__dict__ for j in self._jobs.values()], schema=JOBS_SCHEMA)
+
     def _save(self) -> None:
-        rows = [j.__dict__ for j in self._jobs.values()]
-        schema = pa.schema(
-            [(c, pa.int64() if c == "job_id" else pa.bool_() if c in ("incremental", "refresh_now") else pa.string()) for c in JOBS_COLUMNS]
-        )
-        table = pa.Table.from_pylist(rows, schema=schema)
-        tmp = self._jobs_path + ".tmp"
-        pq.write_table(table, tmp)
-        os.replace(tmp, self._jobs_path)  # atomic swap: readers never see a torn file
+        _write(self._table(), self._jobs_path, self._jobs_path + ".tmp")
+
+    def _append(self, path: str, schema: pa.Schema, rows: list) -> None:
+        """Add ``rows`` (dataclass instances) to the table directory ``path``
+        as ONE new part file, written under a hidden name (Spark's reader
+        skips dot-files, so a crash mid-write leaves nothing readers see)
+        and renamed into place, the ``_save`` discipline."""
+        if not rows:
+            return
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        table = pa.Table.from_pylist([r.__dict__ for r in rows], schema=schema)
+        _write(table, os.path.join(path, name), os.path.join(path, f".{name}.tmp"))
+
+    def _frame(self, path: str, schema: pa.Schema) -> DataFrame:
+        """A table directory as a DataFrame with the declared schema; part
+        files written by Spark and by ``_append`` read alike."""
+        if not os.path.isdir(path):
+            return self.spark.createDataFrame(schema.empty_table())
+        return self.spark.read.schema(from_arrow_schema(schema)).parquet(path)
 
     # -- job CRUD -----------------------------------------------------------
 
@@ -115,15 +152,9 @@ class JobStore:
         return [j for j in self._jobs.values() if j.document]
 
     def jobs_df(self) -> DataFrame:
-        """The jobs table as a DataFrame for Spark-side predicates."""
-        rows = [j.as_row() for j in self._jobs.values()]
-        return self.spark.createDataFrame(
-            rows,
-            "job_id long, document string, sheet string, cellrange string, "
-            "target_system string, destination string, incremental boolean, "
-            "refresh_now boolean, refresh_interval string, last_success string, "
-            "state string, last_result string, lease_ts string",
-        )
+        """The jobs table as a DataFrame, for callers that query it with
+        Spark; the scheduler works on ``jobs()``."""
+        return self.spark.createDataFrame(self._table())
 
     # -- state machine ------------------------------------------------------
 
@@ -187,53 +218,27 @@ class JobStore:
     def mark_invalid_schedule(self, job_id: int, error: str) -> str:
         return self.mark_failure(job_id, f"invalid refresh interval: {error}")
 
-    # -- audit log ----------------------------------------------------------
-
-    def append_log(self, record: RunRecord) -> None:
-        """Single-record append (see append_logs for the batched path)."""
-        self.append_logs([record])
+    # -- audit log and metrics (instrumentation.py; reference @instrumented) --
 
     def append_logs(self, records: list[RunRecord]) -> None:
         """Synchronous append — strengthens the reference's fire-and-forget
         daemon-thread log (manager.py:147-164, at-most-once, lost on crash)
         to exactly-recorded. Batched: the scheduler passes a whole tick's
-        records at once and ``coalesce(1)`` writes them as ONE parquet file,
-        so a 1-second poll cadence grows the log directory by at most one
-        file per busy tick instead of one per run."""
-        if not records:
-            return
-        df = self.spark.createDataFrame(
-            [r.as_row() for r in records],
-            "start string, end string, document string, sheet string, "
-            "cellrange string, status string, result string",
-        )
-        df.coalesce(1).write.mode("append").parquet(self._log_path)
+        records at once and they land as ONE parquet file, so a 1-second
+        poll cadence grows the log directory by at most one file per busy
+        tick instead of one per run."""
+        self._append(self._log_path, RUN_LOG_SCHEMA, records)
 
     def run_log(self) -> DataFrame:
-        if not os.path.isdir(self._log_path):
-            return self.spark.createDataFrame([], "start string, end string, document string, sheet string, cellrange string, status string, result string")
-        return self.spark.read.parquet(self._log_path)
+        return self._frame(self._log_path, RUN_LOG_SCHEMA)
 
-    # -- metrics table (instrumentation.py; reference @instrumented) ---------
-
-    _METRICS_SCHEMA = "ts string, op string, args string, seconds double, rows long"
-
-    @property
-    def _metrics_path(self) -> str:
-        return os.path.join(self.root, "metrics")
-
-    def append_metrics(self, metrics: list) -> None:
-        """Persist Recorder output (anything with ``as_row()`` matching
-        METRICS_COLUMNS), batched like append_logs: one file per flush."""
-        if not metrics:
-            return
-        df = self.spark.createDataFrame([m.as_row() for m in metrics], self._METRICS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self._metrics_path)
+    def append_metrics(self, metrics: list[Metric]) -> None:
+        """Persist Recorder output, batched like append_logs: one file per
+        flush."""
+        self._append(self._metrics_path, METRICS_SCHEMA, metrics)
 
     def metrics_df(self) -> DataFrame:
-        if not os.path.isdir(self._metrics_path):
-            return self.spark.createDataFrame([], self._METRICS_SCHEMA)
-        return self.spark.read.parquet(self._metrics_path)
+        return self._frame(self._metrics_path, METRICS_SCHEMA)
 
     # -- pinned schemas (drift detection; SURVEY §1.2) ----------------------
 

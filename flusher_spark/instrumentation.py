@@ -60,20 +60,17 @@ def median_seconds(runs: list[float]) -> float:
 
     return float(statistics.median(runs))
 
-#: Schema of the persisted metrics table (JobStore.append_metrics).
-METRICS_COLUMNS = ("ts", "op", "args", "seconds", "rows")
-
 
 @dataclass(frozen=True)
 class Metric:
+    """One metrics row; its fields, in order, are the columns of the
+    metrics table JobStore.append_metrics writes."""
+
     ts: str
     op: str
     args: str
     seconds: float
     rows: int  # -1 = not observed
-
-    def as_row(self) -> tuple:
-        return (self.ts, self.op, self.args, self.seconds, self.rows)
 
 
 def observed(df: DataFrame, obs: Observation, name: str = "rows") -> DataFrame:

@@ -648,9 +648,12 @@ def _train_pq_codebooks(
     # which forked a py4j/BLAS-threaded driver (fork-after-threads children
     # can HANG, which no except-clause catches; the r14 driver window read
     # this entry at 21.4 s under load) and sized itself off os.cpu_count()
-    # rather than the session. Per-subspace arithmetic is unchanged and
-    # runs on one host either way, so the codebooks are bit-identical to
-    # the serial loop (asserted in tests/test_operators.py); collect()
+    # rather than the session. Per-subspace arithmetic is unchanged, so on
+    # a single-host deployment (local master: executors share the driver's
+    # numpy/BLAS) the codebooks are bit-identical to the serial loop
+    # (asserted in tests/test_operators.py). On a multi-host cluster an
+    # executor's numpy/BLAS build may differ from the driver's, so the
+    # codebooks may differ in the last bits between the two paths; collect()
     # preserves partition order = subspace order. The payload is bounded
     # (sample_size × dsub doubles per task, ~32 KB at the defaults). Any
     # job failure (no executors, pickling quirk) falls back to the same

@@ -4,6 +4,9 @@ cites the reference behavior it preserves (SURVEY.md §2.A rows 15-24)."""
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 import pytest
 
 from flusher_spark.control.model import Job
@@ -215,6 +218,107 @@ def test_metrics_recorded_per_run(env):
     assert len([f for f in mdir.iterdir() if f.suffix == ".parquet"]) == 1
 
 
+def test_log_and_metrics_read_spark_written_parts(spark, tmp_path):
+    """run_log/ and metrics/ written by earlier versions through Spark read
+    back next to the driver-side part files with the same schema, and a
+    hidden temp file left by a crash mid-append is skipped by the reader
+    and by the next append."""
+    import os
+
+    from flusher_spark.control.model import RunRecord
+    from flusher_spark.instrumentation import Metric
+
+    log_ddl = ("start string, end string, document string, sheet string, "
+               "cellrange string, status string, result string")
+    metrics_ddl = "ts string, op string, args string, seconds double, rows long"
+    store = JobStore(spark, str(tmp_path / "c"))
+    log_dir, metrics_dir = os.path.join(store.root, "run_log"), os.path.join(store.root, "metrics")
+    spark.createDataFrame([("s0", "e0", "doc", "s1", "", "Success", "ok")], log_ddl) \
+        .coalesce(1).write.mode("append").parquet(log_dir)
+    spark.createDataFrame([("t0", "run_job", "", 1.5, 3)], metrics_ddl) \
+        .coalesce(1).write.mode("append").parquet(metrics_dir)
+    for d in (log_dir, metrics_dir):
+        with open(os.path.join(d, ".part-crashed.parquet.tmp"), "wb") as fh:
+            fh.write(b"torn write")
+
+    store.append_logs([RunRecord("s1", "e1", "doc", "s2", "A1:B", "Failure", "boom")])
+    store.append_metrics([Metric("t1", "run_job:failed", "{'sheet': 's2'}", 0.25, -1)])
+    store.append_logs([])  # nothing to record: no file
+    log, metrics = store.run_log(), store.metrics_df()
+    assert log.schema == spark.createDataFrame([], log_ddl).schema
+    assert metrics.schema == spark.createDataFrame([], metrics_ddl).schema
+    assert sorted(tuple(r) for r in log.collect()) == [
+        ("s0", "e0", "doc", "s1", "", "Success", "ok"),
+        ("s1", "e1", "doc", "s2", "A1:B", "Failure", "boom"),
+    ]
+    assert sorted(tuple(r) for r in metrics.collect()) == [
+        ("t0", "run_job", "", 1.5, 3),
+        ("t1", "run_job:failed", "{'sheet': 's2'}", 0.25, -1),
+    ]
+    for d in (log_dir, metrics_dir):
+        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 2
+
+    # A crash during the very first append leaves only the temp file.
+    fresh = JobStore(spark, str(tmp_path / "fresh"))
+    os.makedirs(os.path.join(fresh.root, "run_log"))
+    with open(os.path.join(fresh.root, "run_log", ".part-crashed.parquet.tmp"), "wb") as fh:
+        fh.write(b"torn write")
+    assert fresh.run_log().count() == 0 and fresh.metrics_df().count() == 0
+
+
+@contextmanager
+def _job_group(sc):
+    """Put this thread's Spark jobs in a fresh job group for the block and
+    yield a counter of them (the status tracker works with the UI
+    disabled); the enclosing group comes back on exit."""
+    group = f"count-{uuid.uuid4().hex}"
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    outer = [sc.getLocalProperty(k) for k in keys]
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for k, v in zip(keys, outer):
+            sc.setLocalProperty(k, v)
+
+
+def test_idle_tick_launches_no_spark_job(env):
+    """The control plane runs on the driver: a tick with jobs present but
+    none due launches no Spark job."""
+    store, _, _, sched = env
+    store.put(Job(1, "doc", "s1", refresh_interval="1 day", last_success=NOW))
+    store.put(Job(2, "doc", "s1", refresh_now=True, state="Running", lease_ts=NOW))
+    with _job_group(sched.spark.sparkContext) as idle_jobs:
+        assert sched.tick(NOW) == []
+    assert idle_jobs() == 0
+
+
+def test_busy_tick_launches_spark_jobs_only_in_pipelines(env):
+    """The due predicate, the state transitions and the run-log and metrics
+    appends launch no Spark job: every job of a busy tick is one of its
+    pipelines'."""
+    store, _, _, sched = env
+    sc = sched.spark.sparkContext
+    store.put(Job(3, "doc", "s1", target_system="warehouse", destination="t3", refresh_now=True))
+    store.put(Job(4, "doc", "s2", refresh_now=True))
+    real_run_job = sched.run_job
+    pipeline_jobs: list[int] = []
+
+    def run_job(job):
+        with _job_group(sc) as count:
+            result = real_run_job(job)
+        pipeline_jobs.append(count())
+        return result
+
+    sched.run_job = run_job
+    with _job_group(sc) as tick_jobs:
+        results = sched.tick(NOW)
+    assert [r[:2] for r in results] == [(3, "Success"), (4, "Success")]
+    assert len(pipeline_jobs) == 2 and min(pipeline_jobs) > 0
+    assert tick_jobs() == 0
+    assert store.run_log().count() == 2 and store.metrics_df().count() == 2
+
+
 def test_instrumented_decorator_logs_args_and_time():
     """The reference decorator contract (utils.py:5-25): args logged before,
     'took N secs' after, return value passed through."""
@@ -257,16 +361,31 @@ def test_schema_pinned_across_runs(env):
     assert row["a"] is None  # drifted cell nulled under the pinned LongType
 
 
-def test_due_jobs_is_a_spark_filter(env):
+def test_due_jobs_predicate(env):
     store, _, _, _ = env
     store.put(Job(1, "doc", "s1", refresh_interval="2 minutes", last_success="2024-06-01T11:00:00"))
     store.put(Job(2, "doc", "s1", refresh_interval="1 day", last_success="2024-06-01T11:00:00"))
     store.put(Job(3, "doc", "s1", refresh_now=True))
     store.put(Job(4, "doc", "s1"))  # no trigger, no schedule → never due
+    # Running: skipped while the lease is fresh, due once it has expired
+    # (lease age strictly greater than lease_seconds=3600).
+    store.put(Job(5, "doc", "s1", refresh_now=True, state="Running", lease_ts="2024-06-01T11:00:00"))
+    store.put(Job(6, "doc", "s1", refresh_now=True, state="Running", lease_ts="2024-06-01T10:59:59"))
+    # Elapsed exactly equal to the interval is not due; one second more is.
+    store.put(Job(7, "doc", "s1", refresh_interval="2 minutes", last_success="2024-06-01T11:58:00"))
+    store.put(Job(8, "doc", "s1", refresh_interval="2 minutes", last_success="2024-06-01T11:57:59"))
+    # Offset stamps are converted to UTC: same outcomes as naive UTC ones.
+    store.put(Job(9, "doc", "s1", refresh_interval="2 minutes", last_success="2024-06-01T11:58:00Z"))
+    store.put(Job(10, "doc", "s1", refresh_interval="2 minutes", last_success="2024-06-01T11:57:59+00:00"))
+    store.put(Job(11, "doc", "s1", refresh_interval="2 minutes", last_success="2024-06-01T13:58:00+02:00"))
+    store.put(Job(12, "doc", "s1", refresh_now=True, state="Running", lease_ts="2024-06-01T11:00:00Z"))
+    store.put(Job(13, "doc", "s1", refresh_now=True, state="Running", lease_ts="2024-06-01T10:59:59+00:00"))
     seconds, errors = parse_intervals(store.jobs())
     assert errors == {}
-    due = due_jobs(store.jobs_df(), seconds, NOW).select("job_id").collect()
-    assert sorted(r["job_id"] for r in due) == [1, 3]
+    expected = [1, 3, 6, 8, 10, 13]
+    assert due_jobs(store.jobs(), seconds, NOW) == expected
+    for now in (NOW + "Z", NOW + "+00:00", "2024-06-01T14:00:00+02:00"):
+        assert due_jobs(store.jobs(), seconds, now) == expected
 
 
 def test_store_persistence(spark, tmp_path):
@@ -276,6 +395,15 @@ def test_store_persistence(spark, tmp_path):
     reloaded = JobStore(spark, str(tmp_path / "c"))
     j = reloaded.get(7)
     assert j.state == "Running" and j.lease_ts == NOW
+    # The control table keeps its column names and types.
+    assert reloaded.jobs_df().schema == spark.createDataFrame([], (
+        "job_id long, document string, sheet string, cellrange string, "
+        "target_system string, destination string, incremental boolean, "
+        "refresh_now boolean, refresh_interval string, last_success string, "
+        "state string, last_result string, lease_ts string")).schema
+    assert [tuple(r) for r in reloaded.jobs_df().collect()] == [
+        (7, "doc", "s1", "", "", "", False, False, "5 minutes", "", "Running", "", NOW)
+    ]
 
 
 def test_concurrent_jobs_overlap_and_state_machine_holds(spark, tmp_path):
@@ -396,8 +524,7 @@ def test_r11_control_plane_fixes(spark, tmp_path):
     store.put(Job(job_id=1, document="D", sheet="S", cellrange="", target_system="",
                   destination="", incremental=False, refresh_now=True,
                   refresh_interval="", last_success="", state="Running", lease_ts=""))
-    due = due_jobs(store.jobs_df(), {}, "2026-01-01T00:00:00", lease_seconds=3600)
-    assert [r["job_id"] for r in due.select("job_id").collect()] == [1]
+    assert due_jobs(store.jobs(), {}, "2026-01-01T00:00:00", lease_seconds=3600) == [1]
 
     # (3) The zero-sheets KeyError (mentions BOTH words) is diagnosed as a
     # worksheet problem with candidate enrichment, not document-not-found.
@@ -492,8 +619,8 @@ def test_claim_failure_is_isolated_and_rolled_back(env, monkeypatch):
     results = sched.tick(NOW)
     monkeypatch.setattr(store, "_save", real_save)
     # whichever job claimed first lost its persist and was skipped — the
-    # OTHER one still ran (claim order follows the due collect, which is
-    # not guaranteed, so the assertion is order-agnostic)
+    # OTHER one still ran (the assertion does not depend on which job
+    # claims first)
     ran = [r[0] for r in results]
     assert len(ran) == 1 and results[0][1] == "Success"
     skipped = ({1, 2} - set(ran)).pop()

@@ -4,9 +4,11 @@ Usage: python tools/capture_plans.py <suffix> <name> [name...]
 
 Writes plans/$SPARK_GRAFT_PLAN_DIR/<name>_<suffix>.txt (default r15) for each query, built against
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1). Plan construction only —
-no job is executed (entries whose *build half* runs actions, e.g. the
-persisted-index entries, still execute that half; all headline entries are
-pure plan construction).
+the captured plan is never executed. Entries whose *build half* runs actions
+still execute that half: the persisted-index entries, and two headline
+entries that run bounded jobs while their plans are built —
+events_zscore_outliers (collects its per-group threshold) and
+similarity_topk_pq (trains its PQ codebooks as one parallelize job).
 """
 
 from __future__ import annotations

@@ -278,9 +278,9 @@ class Scheduler:
             )
             results.append((job_id, status, result))
         if records:
-            # One log file per tick, not per run — at a 1-second poll cadence
-            # a per-run write is the exact small-files hazard Warehouse.compact
-            # exists to fix. Metrics flush on the same cadence.
+            # One log file per tick, not per run: at a 1-second poll cadence
+            # per-run writes would pile up small files that every run-log
+            # read must open. Metrics flush on the same cadence.
             self.store.append_logs(records)
             self.store.append_metrics(self.recorder.drain())
         for hook in self.on_tick:
@@ -298,28 +298,3 @@ class Scheduler:
             time.sleep(poll_seconds)
             self.tick()
             ticks += 1
-
-    def run_stream(self, processing_time: str = "1 second"):
-        """The daemon as a Structured Streaming query: a rate-source tick
-        stream with a ``processingTime`` trigger drives one scheduler tick
-        per micro-batch — the idiomatic Spark shape of the reference's
-        ``while True: sleep(1)`` loop (manager.py:206-214), with the engine
-        managing trigger cadence, backpressure and query lifecycle.
-
-        Returns the StreamingQuery; callers stop() it. Job work itself runs
-        driver-side exactly like tick() — the stream is the CLOCK, not the
-        data path (the jobs table is small by contract; the data path inside
-        each job is a full Spark plan already)."""
-
-        def _tick_batch(_batch_df, _batch_id: int) -> None:
-            self.tick()
-
-        return (
-            self.spark.readStream.format("rate")
-            .option("rowsPerSecond", 1)
-            .load()
-            .writeStream.trigger(processingTime=processing_time)
-            .foreachBatch(_tick_batch)
-            .queryName("flusher_scheduler")
-            .start()
-        )

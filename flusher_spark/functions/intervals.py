@@ -7,9 +7,8 @@ behavior preserved:
   - seconds / microseconds / weeks / months are rejected (reference
     refresh_interval.py:16-19 rejects sub-minute and unknown units)
   - a string with no recognized unit is rejected
-Returns datetime.timedelta so schedule arithmetic stays in pure Python; the
-Spark-side predicate uses an equivalent INTERVAL expression
-(control/scheduler.py).
+Returns datetime.timedelta, so schedule arithmetic (the due predicate in
+control/scheduler.py) stays in pure Python.
 """
 
 from __future__ import annotations
@@ -74,12 +73,3 @@ def from_human(text: str) -> timedelta:
         # instead of disabling that one job (r11 review).
         raise ValueError(f"interval out of range: {text!r} ({exc})") from exc
 
-
-def to_sql_interval(text: str) -> str:
-    """Same language → a complete ANSI ``INTERVAL`` literal, e.g.
-    ``"INTERVAL 5400 SECOND"`` — paste it into SQL as-is, do NOT prefix
-    another ``INTERVAL`` (the docstring used to describe a bare literal
-    body, and a caller following it would have produced ``INTERVAL
-    INTERVAL …`` — r13 review)."""
-    delta = from_human(text)
-    return f"INTERVAL {int(delta.total_seconds())} SECOND"

@@ -48,7 +48,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ASSET_SCHEMA = T.StructType(
@@ -1265,17 +1264,6 @@ def sniff_media_meta(payload: bytes) -> dict:
         return {"kind": "audio", "n_frames": d["n_frames"],
                 "duration_s": d["duration_s"], "sample_rate": d["sample_rate"]}
     return {}
-
-
-def filter_by_meta(df: DataFrame, kind: str | None = None, min_width: int | None = None) -> DataFrame:
-    """Metadata predicates are plain columns — they prune BEFORE any decode
-    UDF runs (the point of keeping meta typed next to the opaque payload)."""
-    out = df
-    if kind:
-        out = out.where(F.col("kind") == kind)
-    if min_width is not None:
-        out = out.where(F.col("meta.width") >= min_width)
-    return out
 
 
 def resize(df: DataFrame, width: int, height: int, fake: bool = True) -> DataFrame:

@@ -6,6 +6,12 @@ same parquet tables). Entries without an oracle are genuinely
 non-SQL-expressible (LSH dedup, approximate similarity) and get rows-only
 checks.
 
+A query whose DataFrame body would plan exactly like its oracle is defined
+once, as SQL: ``register_sql`` makes the oracle text the Spark plan too
+(``sql_frame`` runs it over views of the tables it names), so both engines
+run the same text. ``register`` is for the formulations that plan
+differently on purpose (limb sums, single-scan folds, operator calls).
+
 Column-name discipline: every computed column is aliased identically in the
 Spark plan and the oracle SQL — the correctness harness sorts columns by name
 and hashes values, so names must line up exactly.
@@ -22,10 +28,14 @@ for computed revenue expressions) are documented in plans/num.py.
 
 from __future__ import annotations
 
+import re
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from flusher_spark.io.tables import TABLES, register_views
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -36,21 +46,53 @@ class CatalogEntry:
     fn: QueryFn
     oracle: str | None
     doc: str
+    #: True when ``fn`` runs the oracle text itself (``register_sql``).
+    sql: bool = False
 
 
 _REGISTRY: dict[str, CatalogEntry] = {}
+
+
+def _add(entry: CatalogEntry) -> None:
+    if entry.name in _REGISTRY:
+        raise ValueError(f"duplicate catalog entry: {entry.name}")
+    _REGISTRY[entry.name] = entry
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the catalog (oracle=None → rows-only check)."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _REGISTRY:
-            raise ValueError(f"duplicate catalog entry: {name}")
-        _REGISTRY[name] = CatalogEntry(name, fn, oracle, (fn.__doc__ or "").strip())
+        _add(CatalogEntry(name, fn, oracle, (fn.__doc__ or "").strip()))
         return fn
 
     return deco
+
+
+def sql_frame(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """``spark.sql(sql)`` over temp views of only the tables the text names.
+
+    Views are registered per table word, not all ten: every parquet read
+    without a schema launches a Spark job, so a view nobody reads still
+    costs one."""
+    words = set(re.findall(r"\w+", sql.lower()))
+    register_views(spark, sf_dir, tuple(t for t in TABLES if t in words))
+    return spark.sql(sql)
+
+
+def register_sql(name: str, sql: str, doc: str) -> None:
+    """Add an entry defined by its SQL alone: the oracle text is also the
+    Spark plan."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return sql_frame(spark, sf_dir, sql)
+
+    # Named after the entry and owned by the module that registers it, as a
+    # decorated body is (namedtuple's idiom): per-module rollups such as the
+    # benchmark's plans.<module> metrics read fn.__module__.
+    fn.__name__ = fn.__qualname__ = name
+    fn.__module__ = sys._getframe(1).f_globals["__name__"]
+    _add(CatalogEntry(name, fn, sql, doc.strip(), sql=True))
 
 
 #: Names surfaced first by ``registry()``. The driver's correctness harness

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from flusher_spark.io.tables import load_table
 from flusher_spark.operators.dedup import shingle_rows
 from flusher_spark.operators.text import WS_CLASS, n_tokens, tokens
-from flusher_spark.plans.catalog import register
+from flusher_spark.plans.catalog import register, register_sql
 
 # The whitespace class is spelled out (not '\s') in every oracle: DuckDB's
 # RE2 \s excludes \x0B while Spark/Java's includes it — the explicit class
@@ -1317,9 +1317,9 @@ def _e2e_pipeline(spark: SparkSession, sf_dir: str, near_dup_pairs) -> DataFrame
     return _pack_rollup(s5, "nt")
 
 
-@register(
+register_sql(
     "corpus_k_anonymity",
-    oracle="""
+    sql="""
     WITH sized AS (
       SELECT lang, source, n_chars,
              COUNT(*) OVER (PARTITION BY lang, source) AS grp_n
@@ -1335,9 +1335,7 @@ def _e2e_pipeline(spark: SparkSession, sf_dir: str, near_dup_pairs) -> DataFrame
     FROM generalized GROUP BY lang_out, source_out
     ORDER BY lang_out, source_out
     """,
-)
-def corpus_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-ANONYMITY suppression over a quasi-identifier tuple — the
+    doc="""K-ANONYMITY suppression over a quasi-identifier tuple — the
     release-safety gate a training-data pipeline runs before shipping
     per-document metadata: any (lang, source) combination carried by
     fewer than k=10 documents is generalized to '*' so no document is
@@ -1348,24 +1346,8 @@ def corpus_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from this output (it aggregates ALL suppressed rows, so it is the
     LARGEST pool available — iterating generalization levels is a policy
     loop over this same primitive, not a different operator). Counts and
-    char totals are exact integers — bit-stable on both engines."""
-    d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang", "source")
-    k = F.lit(10)
-    sized = d.select("lang", "source", "n_chars", F.count("*").over(w).alias("grp_n"))
-    generalized = sized.select(
-        F.when(F.col("grp_n") >= k, F.col("lang")).otherwise("*").alias("lang_out"),
-        F.when(F.col("grp_n") >= k, F.col("source")).otherwise("*").alias("source_out"),
-        "n_chars",
-    )
-    return (
-        generalized.groupBy("lang_out", "source_out")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-        )
-        .orderBy("lang_out", "source_out")
-    )
+    char totals are exact integers — bit-stable on both engines.""",
+)
 
 
 @register(

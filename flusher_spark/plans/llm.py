@@ -26,7 +26,7 @@ from flusher_spark.operators import dedup as D
 from flusher_spark.operators import dedup_index as DI
 from flusher_spark.operators import similarity as S
 from flusher_spark.operators import text as T
-from flusher_spark.plans.catalog import register
+from flusher_spark.plans.catalog import register, register_sql
 from flusher_spark.plans.num import sql_davg
 
 # Whitespace class spelled out (not '\s'): DuckDB's RE2 \s excludes \x0B
@@ -2584,9 +2584,9 @@ def profile_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "profile_lineitem_columns",
-    oracle=f"""
+    sql=f"""
     SELECT COUNT(*) AS n_rows,
            CAST(COUNT(l_quantity) AS BIGINT) AS qty_non_null,
            CAST(MIN(l_quantity) AS DOUBLE) AS qty_min,
@@ -2599,30 +2599,12 @@ def profile_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS shipdate_nulls
     FROM lineitem
     """,
-)
-def profile_lineitem_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass column profiling — the look-before-you-train staple: row
+    doc="""One-pass column profiling — the look-before-you-train staple: row
     count, per-column null counts, exact min/max, decimal-exact averages,
     and a categorical cardinality, all in a single map-side-combined
     aggregate (one scan, one 1-row shuffle) rather than a per-column loop
-    of actions."""
-    from flusher_spark.plans.num import davg
-
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.agg(
-        F.count("*").alias("n_rows"),
-        F.count("l_quantity").alias("qty_non_null"),
-        F.min("l_quantity").cast("double").alias("qty_min"),
-        F.max("l_quantity").cast("double").alias("qty_max"),
-        davg("l_quantity").alias("qty_avg"),
-        F.min("l_extendedprice").cast("double").alias("price_min"),
-        F.max("l_extendedprice").cast("double").alias("price_max"),
-        davg("l_extendedprice").alias("price_avg"),
-        F.countDistinct("l_returnflag").alias("flag_cardinality"),
-        F.sum(F.when(F.col("l_shipdate").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("shipdate_nulls"),
-    )
+    of actions.""",
+)
 
 
 @register(
@@ -3023,9 +3005,9 @@ def dedup_canonical_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "dedup_sorted_neighborhood",
-    oracle="""
+    sql="""
     WITH t AS (
       SELECT doc_id, lower(substring(text, 1, 12)) AS blk,
              lower(substring(text, 1, 60)) AS k
@@ -3044,9 +3026,7 @@ def dedup_canonical_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cand WHERE lev <= 12
     ORDER BY doc_a, doc_b
     """,
-)
-def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sorted-neighborhood entity-resolution blocking (Hernández &
+    doc="""Sorted-neighborhood entity-resolution blocking (Hernández &
     Stolfo's merge/purge) — the THIRD candidate-generation family next to
     LSH banding and the shingle inverted index: sort records by a
     canonical key (here the lowercased 60-char text prefix), then compare
@@ -3060,46 +3040,8 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     share one window sort, levenshtein is a codegen'd expression, and the
     pair set is |docs|·(w−1) BEFORE filtering — linear, never the
     quadratic all-pairs the method exists to avoid. Output is exact and
-    deterministic, so the oracle replays the identical windows."""
-    d = load_table(spark, sf_dir, "documents")
-    t = d.select(
-        "doc_id",
-        F.lower(F.substring("text", 1, 12)).alias("blk"),
-        F.lower(F.substring("text", 1, 60)).alias("k"),
-    )
-    w = Window.partitionBy("blk").orderBy("k", "doc_id")
-    s = t.select(
-        "doc_id",
-        "k",
-        F.lead("doc_id", 1).over(w).alias("n1_id"),
-        F.lead("k", 1).over(w).alias("n1_k"),
-        F.lead("doc_id", 2).over(w).alias("n2_id"),
-        F.lead("k", 2).over(w).alias("n2_k"),
-    )
-    cand = (
-        s.where(F.col("n1_id").isNotNull())
-        .select(
-            F.col("doc_id").alias("a"),
-            F.col("n1_id").alias("b"),
-            F.levenshtein("k", "n1_k").alias("lev"),
-        )
-        .unionByName(
-            s.where(F.col("n2_id").isNotNull()).select(
-                F.col("doc_id").alias("a"),
-                F.col("n2_id").alias("b"),
-                F.levenshtein("k", "n2_k").alias("lev"),
-            )
-        )
-    )
-    return (
-        cand.where(F.col("lev") <= 12)
-        .select(
-            F.least("a", "b").alias("doc_a"),
-            F.greatest("a", "b").alias("doc_b"),
-            F.col("lev").cast("long").alias("lev"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    deterministic, so the oracle replays the identical windows.""",
+)
 
 
 @register(

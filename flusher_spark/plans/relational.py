@@ -33,9 +33,9 @@ import pandas as pd  # module-level: postponed annotations make UDF type
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flusher_spark.io.tables import load_table, register_views
+from flusher_spark.io.tables import load_table
 from flusher_spark.operators.asof import asof_join
-from flusher_spark.plans.catalog import register
+from flusher_spark.plans.catalog import register, register_sql
 from flusher_spark.plans.num import (
     davg,
     dec,
@@ -435,9 +435,9 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "join_full_outer",
-    oracle="""
+    sql="""
     WITH s AS (SELECT s_nationkey AS nationkey, COUNT(*) AS n_suppliers FROM supplier GROUP BY 1),
          c AS (SELECT c_nationkey AS nationkey, COUNT(*) AS n_customers FROM customer GROUP BY 1)
     SELECT COALESCE(s.nationkey, c.nationkey) AS nationkey,
@@ -445,28 +445,9 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
            COALESCE(n_customers, 0) AS n_customers
     FROM s FULL JOIN c ON s.nationkey = c.nationkey
     """,
+    doc="""Full outer join of two pre-aggregations (aggregate-then-join keeps the
+    shuffled data minimal — the scalable order of operations).""",
 )
-def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join of two pre-aggregations (aggregate-then-join keeps the
-    shuffled data minimal — the scalable order of operations)."""
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("nationkey"))
-        .agg(F.count("*").alias("n_suppliers"))
-    )
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count("*").alias("n_customers"))
-    )
-    return (
-        s.join(c, "nationkey", "full")
-        .select(
-            "nationkey",
-            F.coalesce("n_suppliers", F.lit(0)).alias("n_suppliers"),
-            F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
-        )
-    )
 
 
 @register(
@@ -514,95 +495,53 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "agg_distinct",
-    oracle="""
+    sql="""
     SELECT o_orderpriority,
            COUNT(DISTINCT o_custkey) AS n_customers,
            COUNT(*) AS n_orders
     FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
+    doc="""Distinct aggregation (expand + two-phase agg under the hood).""",
 )
-def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregation (expand + two-phase agg under the hood)."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy("o_orderpriority")
-        .agg(F.countDistinct("o_custkey").alias("n_customers"), F.count("*").alias("n_orders"))
-        .orderBy("o_orderpriority")
-    )
 
 
-@register(
+register_sql(
     "agg_rollup",
-    oracle=f"""
+    sql=f"""
     SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
            COALESCE(l_linestatus, 'ALL') AS linestatus,
            {sql_dsum('l_quantity')} AS sum_qty, COUNT(*) AS n
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
+    doc="""ROLLUP hierarchy totals (grand total + per-flag + per-pair).""",
 )
-def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals (grand total + per-flag + per-pair)."""
-    l = load_table(spark, sf_dir, "lineitem")
-    return (
-        l.rollup("l_returnflag", "l_linestatus")
-        .agg(dsum("l_quantity").alias("sum_qty"), F.count("*").alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n",
-        )
-    )
 
 
-@register(
+register_sql(
     "agg_cube",
-    oracle=f"""
+    sql=f"""
     SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
            COALESCE(l_linestatus, 'ALL') AS linestatus,
            {sql_dsum('l_quantity')} AS sum_qty, COUNT(*) AS n
     FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
+    doc="""CUBE: all grouping-set combinations of the two dims.""",
 )
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE: all grouping-set combinations of the two dims."""
-    l = load_table(spark, sf_dir, "lineitem")
-    return (
-        l.cube("l_returnflag", "l_linestatus")
-        .agg(dsum("l_quantity").alias("sum_qty"), F.count("*").alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n",
-        )
-    )
 
 
-@register(
+register_sql(
     "agg_grouping_sets",
-    oracle=f"""
+    sql=f"""
     SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
            COALESCE(l_linestatus, 'ALL') AS linestatus,
            {sql_dsum('l_quantity')} AS sum_qty
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
     """,
+    doc="""Explicit GROUPING SETS via the SQL surface (same Catalyst plan).""",
 )
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS via the SQL surface (same Catalyst plan)."""
-    register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(
-        f"""
-        SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-               COALESCE(l_linestatus, 'ALL') AS linestatus,
-               {sql_dsum('l_quantity')} AS sum_qty
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        """
-    )
 
 
 @register(
@@ -636,11 +575,12 @@ def agg_variance_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("count_rows", oracle="SELECT COUNT(*) AS n FROM lineitem")
-def count_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row count (the reference's numrows operator, export.py:31-32 — which
-    fetched every cell to count rows; here it's a metadata-only parquet scan)."""
-    return load_table(spark, sf_dir, "lineitem").agg(F.count("*").alias("n"))
+register_sql(
+    "count_rows",
+    sql="SELECT COUNT(*) AS n FROM lineitem",
+    doc="""Row count (the reference's numrows operator, export.py:31-32 — which
+    fetched every cell to count rows; here it's a metadata-only parquet scan).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -670,47 +610,28 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "window_running_sum",
-    oracle="""
+    sql="""
     SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS orderdate,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
                 OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
     FROM orders
     """,
+    doc="""Per-customer running spend (deterministic via the orderkey tiebreak).""",
 )
-def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer running spend (deterministic via the orderkey tiebreak)."""
-    o = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.col("o_orderdate").cast("date").alias("orderdate"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w).cast("double").alias("running_total"),
-    )
 
 
-@register(
+register_sql(
     "window_lag_delta",
-    oracle="""
+    sql="""
     SELECT event_id, user_id, value,
            value - LAG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS delta
     FROM events
     """,
+    doc="""LAG analytic: per-user event-over-event change.""",
 )
-def window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LAG analytic: per-user event-over-event change."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return e.select(
-        "event_id", "user_id", "value", (F.col("value") - F.lag("value").over(w)).alias("delta")
-    )
 
 
 @register(
@@ -732,9 +653,9 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "window_range_interval",
-    oracle="""
+    sql="""
     SELECT o_orderkey, o_custkey,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
                 OVER (PARTITION BY o_custkey ORDER BY o_orderdate
@@ -742,21 +663,9 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS rolling_30d
     FROM orders
     """,
+    doc="""Time-based RANGE frame: 30-day rolling spend per customer (SQL surface;
+    the DataFrame API's rangeBetween is numeric-only).""",
 )
-def window_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-based RANGE frame: 30-day rolling spend per customer (SQL surface;
-    the DataFrame API's rangeBetween is numeric-only)."""
-    register_views(spark, sf_dir, ("orders",))
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_custkey,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-                    OVER (PARTITION BY o_custkey ORDER BY o_orderdate
-                          RANGE BETWEEN INTERVAL 30 DAY PRECEDING AND CURRENT ROW) AS DOUBLE)
-                 AS rolling_30d
-        FROM orders
-        """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -814,28 +723,22 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.subtract(l)
 
 
-@register("distinct_values", oracle="SELECT DISTINCT c_mktsegment FROM customer")
-def distinct_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT (exact dedup on a projection)."""
-    return load_table(spark, sf_dir, "customer").select("c_mktsegment").distinct()
+register_sql(
+    "distinct_values",
+    sql="SELECT DISTINCT c_mktsegment FROM customer",
+    doc="""DISTINCT (exact dedup on a projection).""",
+)
 
 
-@register(
+register_sql(
     "topk_orders_global",
-    oracle="""
+    sql="""
     SELECT o_orderkey, o_totalprice, CAST(o_orderdate AS DATE) AS orderdate
     FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
     """,
+    doc="""Global top-k (Spark executes as a per-partition take + merge, not a
+    full sort — the right plan at scale).""",
 )
-def topk_orders_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k (Spark executes as a per-partition take + merge, not a
-    full sort — the right plan at scale)."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice", F.col("o_orderdate").cast("date").alias("orderdate"))
-        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .limit(10)
-    )
 
 
 @register(
@@ -865,22 +768,16 @@ def range_scan_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "filter_projection_pushdown",
-    oracle="""
+    sql="""
     SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
     FROM lineitem
     WHERE l_quantity > 45 AND l_shipdate >= TIMESTAMP '2000-01-01'
     """,
+    doc="""Plain filter+project — both reach the parquet scan (PushedFilters /
+    ReadSchema; asserted in tests/test_plans.py).""",
 )
-def filter_projection_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plain filter+project — both reach the parquet scan (PushedFilters /
-    ReadSchema; asserted in tests/test_plans.py)."""
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.where(
-        (F.col("l_quantity") > 45)
-        & (F.col("l_shipdate") >= F.lit("2000-01-01").cast("timestamp_ntz"))
-    ).select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
 
 
 # ---------------------------------------------------------------------------
@@ -943,9 +840,9 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "scalar_math_funcs",
-    oracle="""
+    sql="""
     SELECT l_orderkey, l_linenumber,
            CAST(ROUND(CAST(l_extendedprice AS DECIMAL(12,4)) * CAST(0.1 AS DECIMAL(2,1)), 2) AS DOUBLE) AS price_tenth,
            ABS(l_discount - 0.05) AS disc_dev,
@@ -956,26 +853,9 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            l_orderkey % 7 AS key_mod
     FROM lineitem
     """,
+    doc="""Math function coverage, restricted to IEEE-exact ops (sqrt/abs/round/
+    ceil/floor/mod) so the oracle comparison is bit-stable.""",
 )
-def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math function coverage, restricted to IEEE-exact ops (sqrt/abs/round/
-    ceil/floor/mod) so the oracle comparison is bit-stable."""
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.select(
-        "l_orderkey",
-        "l_linenumber",
-        # Decimal, not double: price*0.1 has 3 decimal digits, so rounding
-        # the double at scale 2 hits midpoints where engines disagree.
-        F.round(dec("l_extendedprice") * F.expr("CAST(0.1 AS DECIMAL(2,1))"), 2)
-        .cast("double")
-        .alias("price_tenth"),
-        F.abs(F.col("l_discount") - 0.05).alias("disc_dev"),
-        F.ceil("l_quantity").alias("qty_ceil"),
-        F.floor("l_quantity").alias("qty_floor"),
-        F.sqrt("l_quantity").alias("qty_sqrt"),
-        (F.col("l_quantity") * F.col("l_quantity")).alias("qty_sq"),
-        (F.col("l_orderkey") % 7).alias("key_mod"),
-    )
 
 
 @register(
@@ -1784,9 +1664,9 @@ def agg_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "user_id")
 
 
-@register(
+register_sql(
     "q12_conditional_agg",
-    oracle="""
+    sql="""
     SELECT l_linestatus,
            CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
              AS high_priority,
@@ -1796,54 +1676,25 @@ def agg_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
     GROUP BY l_linestatus ORDER BY l_linestatus
     """,
-)
-def q12_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional aggregation over a fact-fact join (TPC-H Q12 shape):
+    doc="""Conditional aggregation over a fact-fact join (TPC-H Q12 shape):
     CASE-summing inside a single hash agg — one shuffle on the order key,
-    one on the tiny group key."""
-    l = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-    )
-    o = load_table(spark, sf_dir, "orders")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_priority"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_priority"),
-        )
-        .orderBy("l_linestatus")
-    )
+    one on the tiny group key.""",
+)
 
 
-@register(
+register_sql(
     "q13_order_distribution",
-    oracle="""
+    sql="""
     SELECT c_count, COUNT(*) AS custdist FROM (
       SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
       FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
       GROUP BY c.c_custkey)
     GROUP BY c_count ORDER BY custdist DESC, c_count DESC
     """,
-)
-def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-of-counts (TPC-H Q13 shape): left join keeps zero-order
+    doc="""Count-of-counts (TPC-H Q13 shape): left join keeps zero-order
     customers, then a second aggregation over the first's result — the
-    double-shuffle histogram pattern."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy(c.c_custkey)
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
+    double-shuffle histogram pattern.""",
+)
 
 
 @register(
@@ -4289,9 +4140,9 @@ def events_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "join_null_safe",
-    oracle="""
+    sql="""
     WITH o AS (SELECT CASE WHEN o_custkey % 500 = 0 THEN NULL
                            ELSE o_custkey END AS k, o_totalprice FROM orders),
     c AS (SELECT CASE WHEN c_custkey % 500 = 0 THEN NULL
@@ -4303,9 +4154,7 @@ def events_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM o JOIN c ON o.k IS NOT DISTINCT FROM c.k
     GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment
     """,
-)
-def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL-safe equality join (Spark `<=>` ⇔ SQL IS NOT DISTINCT FROM):
+    doc="""NULL-safe equality join (Spark `<=>` ⇔ SQL IS NOT DISTINCT FROM):
     unlike `=`, NULL keys MATCH each other — the semantic needed when NULL
     is a real category ('unknown customer') rather than absent data, e.g.
     reconciling two systems that both use NULL sentinels. The fixture
@@ -4318,34 +4167,13 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-null keys + an explicit cross of the null sides) or salt it, the
     join_salted_skew machinery verbatim. Spark plans `<=>` as a regular
     hash/sort-merge join key (Coalesce+IsNull tuple), NOT a nested loop —
-    the plan keeps the one-shuffle equi-join shape."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.when(F.col("o_custkey") % 500 == 0, None)
-        .otherwise(F.col("o_custkey"))
-        .alias("ok"),
-    )
-    c = load_table(spark, sf_dir, "customer").select(
-        F.when(F.col("c_custkey") % 500 == 0, None)
-        .otherwise(F.col("c_custkey"))
-        .alias("ck"),
-        "c_mktsegment",
-    )
-    j = o.join(c, F.col("ok").eqNullSafe(F.col("ck")))
-    return (
-        j.groupBy("c_mktsegment")
-        .agg(
-            F.sum(F.when(F.col("ok").isNull(), 1).otherwise(0)).cast("long").alias(
-                "null_key_matches"
-            ),
-            F.count("*").alias("n"),
-        )
-        .orderBy("c_mktsegment")
-    )
+    the plan keeps the one-shuffle equi-join shape.""",
+)
 
 
-@register(
+register_sql(
     "agg_weighted_avg_exact",
-    oracle="""
+    sql="""
     SELECT l_returnflag,
            CAST(SUM(CAST(l_quantity AS DECIMAL(8,2))
                     * CAST(l_extendedprice AS DECIMAL(8,2))) AS DOUBLE)
@@ -4354,9 +4182,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-)
-def agg_weighted_avg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted average as exact-sum-then-one-division: the
+    doc="""Weighted average as exact-sum-then-one-division: the
     quantity-weighted mean price per return flag, with BOTH the weighted
     sum (Σ wᵢxᵢ as a decimal product of 2-decimal base columns — exact,
     no double product ever formed) and the weight sum carried in decimal,
@@ -4366,18 +4192,8 @@ def agg_weighted_avg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     of wᵢxᵢ is partition-order-sensitive, while the decimal formulation
     is associative, partial-aggregates map-side, and hashes identically
     cross-engine. One scan, one shuffle carrying a handful of partials
-    per task."""
-    l = load_table(spark, sf_dir, "lineitem")
-    q = dec("l_quantity", "decimal(8,2)")
-    p = dec("l_extendedprice", "decimal(8,2)")
-    return (
-        l.groupBy("l_returnflag")
-        .agg(
-            (F.sum(q * p).cast("double") / F.sum(q).cast("double")).alias("wavg_price"),
-            F.count("*").alias("n"),
-        )
-        .orderBy("l_returnflag")
-    )
+    per task.""",
+)
 
 
 def bitmap_distinct_words(df: DataFrame, id_col: str, *group_cols: str) -> DataFrame:

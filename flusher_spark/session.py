@@ -61,7 +61,15 @@ def get_session(app_name: str = "flusher_spark", cpus: int | None = None) -> Spa
     from spark-submit instead. Shuffle partitions default to the core count:
     the 200-partition default over-parallelizes local runs and the AQE
     coalescer handles the scale-up direction.
+
+    An already active session is returned with only ``configure`` applied:
+    the builder's confs would otherwise overwrite the live session's (a CLI
+    call inside a test run reset its shuffle partitions to the machine's core
+    count for every later test).
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return configure(active)
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
     builder = SparkSession.builder.appName(app_name)

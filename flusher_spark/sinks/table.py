@@ -9,15 +9,14 @@ completed load, and tests assert it.
 Tables are parquet directories under a warehouse root (one 'dataset', like
 the reference's hard-coded ``g_sheets``, bigquery.py:9). At cluster scale
 the same API fronts saveAsTable/Delta; the parquet layout keeps v1
-dependency-free.
+dependency-free. A table that needs compaction or transactional commits is
+an ``io.snapshots.SnapshotTable``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,11 +34,7 @@ class Warehouse:
         # destination (the Job dataclass default) used to resolve to the root
         # itself, so a full-refresh load could rmtree the whole dataset.
         # ':' covers Windows drive-relative names ('C:evil' contains no
-        # separator yet os.path.join resolves it OUTSIDE the root); the
-        # '.__compacting' suffix is reserved — compact() stages into
-        # '<table>.__compacting' and unconditionally rmtrees it, so a real
-        # table carrying the suffix would be silently destroyed by a
-        # compact of its prefix-named sibling (r14 review).
+        # separator yet os.path.join resolves it OUTSIDE the root).
         if (
             not table
             or table in (".", "..")
@@ -47,7 +42,6 @@ class Warehouse:
             or ":" in table
             or os.sep in table
             or (os.altsep and os.altsep in table)
-            or table.endswith(".__compacting")
         ):
             raise ValueError(f"invalid table name: {table!r}")
         return os.path.join(self.root, table)
@@ -73,140 +67,3 @@ class Warehouse:
 
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self._path(table))
-
-    def compact(self, table: str, target_partitions: int | None = None) -> int:
-        """Small-files compaction: rewrite the table into ``target_partitions``
-        files (default: size-based — one file per 64 MB, min 1).
-
-        Incremental append (the reference's load mode, bigquery.py:45-47)
-        accumulates one file-set per load; at high cadence the table becomes
-        thousands of tiny files and every scan pays per-file open cost. This
-        is the maintenance half of an append-mode sink. Returns the new file
-        count.
-
-        Safety model (file-level, not directory-swap): a SNAPSHOT of the
-        parquet files present at start is read and rewritten into a staging
-        directory; the compacted files are then moved INTO the table and only
-        afterwards are the snapshot's source files removed. Files appended
-        concurrently by ``load(incremental=True)`` are not in the snapshot
-        and are never touched, and the table directory itself never
-        disappears. An interrupted run is DETECTED AND FINISHED
-        DETERMINISTICALLY on the next compact: a ``_compact_pending``
-        sentinel records the snapshot AND the protocol phase, and the
-        phase is flipped ``publishing`` → ``published`` by an atomic
-        rename BETWEEN the publish loop and cleanup — so recovery reads
-        the state transition from the sentinel itself rather than
-        inferring it from filesystem side effects (a staging-dir probe
-        would mis-diagnose a silently-failed rmtree as "publish
-        incomplete" and roll back compacted files AFTER originals had
-        started being deleted — row loss). ``publishing`` → originals are
-        untouched, roll BACK the partially-moved files; ``published`` →
-        every compacted file is in place, roll FORWARD by deleting the
-        recorded originals. The duplicate-rows window is therefore
-        bounded by the crash-to-rerun gap, never left behind silently.
-        Readers between publish and cleanup can still observe duplicates
-        (single-maintainer contract); concurrent full-refresh overwrites
-        remain unsafe alongside compact — use ``SnapshotTable`` for
-        transactional semantics.
-        """
-        path = self._path(table)
-        self._recover_compact(path)
-        snapshot = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-        if not snapshot:
-            return 0
-        src_paths = [os.path.join(path, f) for f in snapshot]
-        df = self.spark.read.parquet(*src_paths)
-        if target_partitions is None:
-            size = sum(os.path.getsize(p) for p in src_paths)
-            target_partitions = max(1, size // (64 * 1024 * 1024))
-        staged = path + ".__compacting"
-        shutil.rmtree(staged, ignore_errors=True)
-        df.coalesce(int(target_partitions)).write.mode("overwrite").parquet(staged)
-        compact_id = uuid.uuid4().hex[:12]
-        sentinel = os.path.join(path, "_compact_pending.json")
-        self._write_sentinel(sentinel, compact_id, snapshot, "publishing")
-        for f in sorted(os.listdir(staged)):
-            if not f.endswith(".parquet"):
-                continue
-            dest = f"compacted-{compact_id}-{f}"
-            # Keep the Hadoop LocalFS checksum alongside its data file.
-            crc = os.path.join(staged, f".{f}.crc")
-            if os.path.exists(crc):
-                os.rename(crc, os.path.join(path, f".{dest}.crc"))
-            os.rename(os.path.join(staged, f), os.path.join(path, dest))
-        # Atomic phase flip: from here on, recovery must roll FORWARD.
-        # Nothing before this line touches an original file; nothing after
-        # it touches a compacted one.
-        self._write_sentinel(sentinel, compact_id, snapshot, "published")
-        shutil.rmtree(staged, ignore_errors=True)
-        self._remove_originals(path, snapshot)
-        os.unlink(sentinel)
-        return len([f for f in os.listdir(path) if f.endswith(".parquet")])
-
-    @staticmethod
-    def _write_sentinel(
-        sentinel: str, compact_id: str, snapshot: list[str], phase: str
-    ) -> None:
-        with open(sentinel + ".tmp", "w") as fh:
-            json.dump(
-                {"compact_id": compact_id, "snapshot": snapshot, "phase": phase},
-                fh,
-            )
-            # DURABILITY, not just atomicity: the 'published' flip must hit
-            # disk BEFORE _remove_originals starts unlinking — on a power
-            # loss (vs a mere process kill) delayed allocation can persist
-            # the unlinks while losing the rename, and recovery would then
-            # read 'publishing' and roll BACK the compacted files: the only
-            # remaining copy of those rows (r11 review). fsync file, then
-            # rename, then fsync the directory so the rename itself is
-            # durable.
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(sentinel + ".tmp", sentinel)
-        dfd = os.open(os.path.dirname(sentinel) or ".", os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-
-    @staticmethod
-    def _remove_originals(path: str, snapshot: list[str]) -> None:
-        for f in snapshot:
-            p = os.path.join(path, f)
-            if os.path.exists(p):
-                os.remove(p)
-            crc = os.path.join(path, f".{f}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
-
-    def _recover_compact(self, path: str) -> None:
-        """Finish or undo an interrupted compact (see compact's safety
-        model). The decision comes from the PHASE recorded in the sentinel
-        — the atomic rename that flips it is the transaction's commit
-        point — never from filesystem side effects like the staging dir's
-        existence (a silently-failed ``rmtree`` would otherwise read as
-        "publish incomplete" after cleanup had already deleted originals,
-        and the rollback would delete the only remaining copy of those
-        rows). Phase ``publishing`` → no original has been touched: roll
-        BACK any compacted files already moved in, so the table returns to
-        exactly its pre-compact state. Phase ``published`` → every
-        compacted file is in place: roll FORWARD by removing the recorded
-        originals. Either way the staging leftovers and the sentinel are
-        consumed and the table is duplicate-free before a new compact
-        begins."""
-        sentinel = os.path.join(path, "_compact_pending.json")
-        if not os.path.exists(sentinel):
-            return
-        with open(sentinel) as fh:
-            pending = json.load(fh)
-        staged = path + ".__compacting"
-        prefix = f"compacted-{pending['compact_id']}-"
-        if pending.get("phase") == "published":
-            self._remove_originals(path, pending["snapshot"])
-        else:
-            for f in os.listdir(path):
-                name = f.removeprefix(".").removesuffix(".crc")
-                if name.startswith(prefix):
-                    os.remove(os.path.join(path, f))
-        shutil.rmtree(staged, ignore_errors=True)
-        os.unlink(sentinel)

@@ -181,7 +181,7 @@ def read_sheet(
 _BOOL_VALUES = {"true", "false", "yes", "no"}
 
 
-def infer_schema(df: DataFrame, sample_rows: int | None = None) -> T.StructType:
+def infer_schema(df: DataFrame) -> T.StructType:
     """Infer a typed schema from a string DataFrame — the explicit stand-in
     for BigQuery autodetect (reference bigquery.py:22-23), computed as ONE
     distributed aggregation (no driver-side row scan): a column is long if
@@ -201,8 +201,7 @@ def infer_schema(df: DataFrame, sample_rows: int | None = None) -> T.StructType:
                 F.max(c.isNotNull()).alias(f"{name}__nonempty"),
             ]
         )
-    sample = df.limit(sample_rows) if sample_rows else df
-    row = sample.agg(*checks).collect()[0].asDict()
+    row = df.agg(*checks).collect()[0].asDict()
 
     fields = []
     for name in df.columns:

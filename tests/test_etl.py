@@ -279,30 +279,6 @@ def test_worksheet_datasource_matches_read_sheet(spark, jobs_csv):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_warehouse_compaction(spark, tmp_path):
-    from flusher_spark.io.tables import load_table
-    from flusher_spark.sinks.table import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    region = load_table(spark, "/root/testdata/sf0.001", "region")
-    # Simulate high-cadence incremental loads: many small files.
-    for _ in range(4):
-        wh.load(region.repartition(8), "r", incremental=True)
-    path = wh._path("r")
-    import os as _os
-
-    before = len([f for f in _os.listdir(path) if f.endswith(".parquet")])
-    assert before >= 16  # several files per load (empty partitions write none)
-    expected = wh.read("r").count()
-    n_files = wh.compact("r", target_partitions=2)
-    assert n_files == 2
-    assert wh.read("r").count() == expected  # data identical
-    # Values survive byte-for-byte
-    assert sorted(map(tuple, wh.read("r").collect())) == sorted(
-        list(map(tuple, region.collect())) * 4
-    )
-
-
 def test_warehouse_rejects_invalid_table_names(spark, tmp_path):
     """An empty destination (the Job dataclass default) used to resolve to
     the dataset ROOT, so a full-refresh load could rmtree every table."""
@@ -316,44 +292,6 @@ def test_warehouse_rejects_invalid_table_names(spark, tmp_path):
             wh.drop(bad)
     assert wh.table_exists("survivor")
     assert wh.read("survivor").count() == 4
-
-
-def test_warehouse_compact_preserves_concurrent_append(spark, tmp_path):
-    """compact() rewrites only the files present in its start-of-compact
-    snapshot: rows appended by load(incremental=True) AFTER the snapshot
-    must survive (the old directory-swap rmtree'd them)."""
-    wh = Warehouse(spark, str(tmp_path))
-    df = read_sheet(spark, GRID)
-    for _ in range(3):
-        wh.load(df.repartition(4), "t", incremental=True)
-
-    appender = Warehouse(spark, str(tmp_path))
-
-    class _SparkProxy:
-        """Fires one concurrent append at the exact point compact() begins
-        reading its snapshot (i.e. after the snapshot was taken)."""
-
-        def __init__(self, real):
-            self._real = real
-            self.fired = False
-
-        @property
-        def read(self):
-            if not self.fired:
-                self.fired = True
-                appender.load(df, "t", incremental=True)
-            return self._real.read
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    wh.spark = _SparkProxy(spark)
-    n_files = wh.compact("t", target_partitions=1)
-    assert wh.spark.fired, "the concurrent append must have interleaved"
-    wh.spark = spark
-    # 3 compacted loads + 1 concurrent append, nothing lost.
-    assert wh.read("t").count() == 4 * 4
-    assert n_files >= 2  # 1 compacted + the concurrently-appended file(s)
 
 
 def test_worksheet_writer_two_phase_commit(spark, tmp_path):
@@ -1169,86 +1107,6 @@ def test_snapshot_vacuum_sweeps_sidecars_and_empty_dirs(spark, tmp_path):
             assert subdirs or names, f"empty commit dir {d}"
 
 
-def test_warehouse_compact_recovers_interrupted_runs(spark, tmp_path):
-    """The _compact_pending sentinel protocol: a crash mid-publish
-    (sentinel phase "publishing") rolls BACK the partially-moved files; a
-    crash mid-cleanup (phase "published", originals partially deleted)
-    rolls FORWARD by finishing the deletes — INCLUDING when the staging
-    directory still exists because its rmtree silently failed, the case a
-    staging-dir-existence discriminator would mis-read as "roll back" and
-    lose rows. Either way the next compact starts duplicate-free and the
-    row set is untouched."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    from flusher_spark.io.tables import load_table
-    from flusher_spark.sinks.table import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    region = load_table(spark, "/root/testdata/sf0.001", "region")
-    for _ in range(3):
-        wh.load(region.repartition(4), "t", incremental=True)
-    path = wh._path("t")
-    expected = wh.read("t").count()
-
-    def parquet_files():
-        return sorted(f for f in _os.listdir(path) if f.endswith(".parquet"))
-
-    # --- crash mid-PUBLISH: simulate by staging one compacted file +
-    # sentinel with the staging dir still present ---
-    snapshot = parquet_files()
-    staged = path + ".__compacting"
-    _os.makedirs(staged, exist_ok=True)
-    cid = "deadbeef0001"
-    with open(_os.path.join(path, "_compact_pending.json"), "w") as fh:
-        _json.dump(
-            {"compact_id": cid, "snapshot": snapshot, "phase": "publishing"}, fh
-        )
-    # a file that "moved in" before the crash (content irrelevant: it must
-    # be rolled back before any reader touches it)
-    _shutil.copy(
-        _os.path.join(path, snapshot[0]),
-        _os.path.join(path, f"compacted-{cid}-part-00000.parquet"),
-    )
-    n_files = wh.compact("t", target_partitions=1)
-    assert wh.read("t").count() == expected, "roll-back must restore the exact row set"
-    assert not _os.path.exists(_os.path.join(path, "_compact_pending.json"))
-    assert n_files == 1
-
-    # --- crash mid-CLEANUP: publish finished (no staging dir), some
-    # originals already deleted; sentinel still lists the full snapshot ---
-    for _ in range(2):
-        wh.load(region.repartition(4), "t", incremental=True)
-    expected2 = wh.read("t").count()
-    snapshot2 = parquet_files()
-    df = spark.read.parquet(*[_os.path.join(path, f) for f in snapshot2])
-    cid2 = "deadbeef0002"
-    staged2 = path + ".__compacting"
-    df.coalesce(1).write.mode("overwrite").parquet(staged2)
-    for f in _os.listdir(staged2):
-        if f.endswith(".parquet"):
-            _os.rename(
-                _os.path.join(staged2, f),
-                _os.path.join(path, f"compacted-{cid2}-{f}"),
-            )
-    with open(_os.path.join(path, "_compact_pending.json"), "w") as fh:
-        _json.dump(
-            {"compact_id": cid2, "snapshot": snapshot2, "phase": "published"}, fh
-        )
-    # the staging dir SURVIVES (simulates a silently-failed rmtree) and
-    # cleanup "crashed" after removing ONE original — recovery must trust
-    # the recorded phase and roll FORWARD; inferring "publish incomplete"
-    # from the staging dir here would delete the compacted files while the
-    # originals are already partial, i.e. lose snapshot2[0]'s rows.
-    _os.remove(_os.path.join(path, snapshot2[0]))
-    # table currently has duplicates (the remaining originals + compacted)
-    wh.compact("t", target_partitions=1)
-    assert wh.read("t").count() == expected2, "roll-forward must finish the cleanup"
-    assert not _os.path.exists(_os.path.join(path, "_compact_pending.json"))
-    assert not _os.path.isdir(staged2), "recovery consumes staging leftovers"
-
-
 def test_snapshot_optimized_write_confs_survive_concurrent_writers(spark, tmp_path):
     """Two clustered tables with DIFFERENT target_file_bytes committing from
     two threads at once: the process-wide lock must serialize each writer's
@@ -1840,3 +1698,15 @@ def test_get_session_defers_master_to_external_launcher(monkeypatch):
     assert _launcher_owns_master() is False
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "54321")
     assert _launcher_owns_master() is True
+
+
+def test_get_session_leaves_a_live_session_conf_alone(spark):
+    """A second get_session on a live session (the CLI's ``main`` inside a
+    test run) returns it with only the engine's runtime confs applied: the
+    builder used to rewrite shuffle partitions to its own cpus, so every
+    later test in the run planned with a different partition count."""
+    from flusher_spark.session import get_session
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert get_session(cpus=2) is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

@@ -9,7 +9,6 @@ from hypothesis import given
 from hypothesis import strategies as st
 
 from flusher_spark.functions import from_human
-from flusher_spark.functions.intervals import to_sql_interval
 
 
 @pytest.mark.parametrize(
@@ -53,10 +52,6 @@ def test_accepts_and_separator():
 def test_property_single_term(n, unit, plural):
     text = f"{n} {unit}{'s' if plural else ''}"
     assert from_human(text) == timedelta(**{unit + "s": n})
-
-
-def test_sql_interval():
-    assert to_sql_interval("90 minutes") == "INTERVAL 5400 SECOND"
 
 
 def test_accepts_stacked_separators():

@@ -16,7 +16,6 @@ from flusher_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 from flusher_spark.operators.multimodal import (
     ASSET_SCHEMA,
     extract_features,
-    filter_by_meta,
     frame_sample,
 )
 from flusher_spark.operators.similarity import brute_force_topk, lsh_topk
@@ -525,19 +524,6 @@ def test_wav_features_null_on_junk(spark):
     rows = {r["asset_id"]: r for r in wav_features(df).collect()}
     assert rows[1]["sample_rate"] == 8000 and rows[1]["peak_amplitude"] == 5
     assert rows[2]["sample_rate"] is None and rows[2]["duration_s"] is None
-
-
-def test_meta_filter_prunes_before_decode(spark, assets):
-    all_rows = assets.collect()
-    widths = sorted(r["meta"]["width"] for r in all_rows if r["kind"] == "image")
-    thresh = widths[len(widths) // 2]  # median → both sides non-empty
-    filtered = filter_by_meta(assets, kind="image", min_width=thresh)
-    rows = filtered.collect()
-    expected = {r["asset_id"] for r in all_rows if r["kind"] == "image" and r["meta"]["width"] >= thresh}
-    assert {r["asset_id"] for r in rows} == expected and expected
-    # The metadata predicate must appear in the plan BEFORE any Python eval.
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "Filter" in plan
 
 
 # -- distributed ranking -----------------------------------------------------

@@ -4,10 +4,13 @@ codegen covers the hot path, and the catalog/driver contract is consistent."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from pyspark.errors import PySparkException
 
 import __spark_entry__ as entrymod
-from flusher_spark.plans.catalog import registry
+from flusher_spark.plans.catalog import registry, sql_frame
 from tests.conftest import SF_DIR as SF
 from tests.conftest import SF_DIR_MED
 
@@ -247,8 +250,16 @@ def test_every_query_builds_a_plan(spark, name):
     streaming entries the fn executes its build half (index writes, a real
     bounded StreamingQuery), so the duplicate walk re-ran multi-second
     builds for a string assert the first walk's plan already carries
-    (~180 s of the suite, measured r15)."""
-    df = registry()[name].fn(spark, SF)
+    (~180 s of the suite, measured r15).
+
+    The same walk guards against twins: a DataFrame body whose optimized
+    plan is ``sameResult`` with its oracle SQL's says the query twice, and
+    belongs in ``register_sql``. ``sameResult`` drops join hints, so they
+    are compared apart (join_cross's broadcast hint picks the other build
+    side than its SQL). Oracles only DuckDB can analyze are skipped; they
+    have no Spark twin. ``_TWIN_OK`` lists the deliberate exceptions."""
+    entry = registry()[name]
+    df = entry.fn(spark, SF)
     df.schema  # noqa: B018 — forces analysis; an unanalyzable plan raises here
     assert df.columns
     plan = _plan(df)
@@ -258,6 +269,30 @@ def test_every_query_builds_a_plan(spark, name):
             f"{name} plans a BroadcastNestedLoopJoin; add to whitelist only "
             "with a documented boundedness argument"
         )
+    if entry.oracle is None or entry.sql or name in _TWIN_OK:
+        return
+    try:
+        oracle_df = sql_frame(spark, SF, entry.oracle)
+    except PySparkException:  # DuckDB-only SQL: unparsable, or fails analysis
+        return
+    opt = df._jdf.queryExecution().optimizedPlan()
+    oracle_opt = oracle_df._jdf.queryExecution().optimizedPlan()
+    assert not (
+        opt.sameResult(oracle_opt) and _join_hints(opt) == _join_hints(oracle_opt)
+    ), f"{name} plans exactly like its oracle SQL; define it once with register_sql"
+
+
+def _join_hints(plan) -> list[str]:
+    return re.findall(r"(?:left|right)Hint=\([^)]*\)", plan.toString())
+
+
+#: Entries that plan like their oracle SQL but keep a Python body, because
+#: the body is the only catalog caller of a helper with a second plan.
+_TWIN_OK = {
+    # domain_quota_report; its skew_precombine=True form pre-prunes each
+    # partition to its local top-Q (tests/test_corpus.py)
+    "corpus_domain_quota",
+}
 
 
 #: Entries where a nested-loop/cartesian is BY DESIGN and bounded: either the
